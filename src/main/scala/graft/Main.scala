@@ -44,7 +44,7 @@ object Main {
       hitTotals.map { case (c, n) => s"$c=$n" }.mkString(" "))
 
     val persisted = TableIO.results(TableIO.readCommitted(spark, root))
-    QualityFilter.statistics(persisted).show(truncate = false)
+    QualityFilter.statistics(persisted.toDF()).show(truncate = false)
 
     val gold = Fixtures.generateGold(spark, n)
     val span = SpanF1.spanScores(persisted, gold)

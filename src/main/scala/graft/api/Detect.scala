@@ -1,16 +1,19 @@
 package graft.api
 
+import scala.reflect.runtime.universe.TypeTag
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.errors._
+import graft.ingest.Uploads
 import graft.scrub.Scrubber
+import graft.scrub.Scrubber.ScrubResult
 
 /** Serving-surface semantics of the reference detector API
-  * (reference src/api.py routes + src/inference.py batch contract), as
-  * library functions over Datasets — the REST layer itself is out of scope,
-  * but every behavioural guarantee a client of `/detect/batch` relies on is
-  * reproduced:
+  * (reference src/api.py routes + src/inference.py batch contract): the
+  * request-scoped core [[graft.serve.HttpApi]] serves, plus the same results
+  * as DataFrames for library callers. Every behavioural guarantee a client
+  * of `/detect/batch` relies on is reproduced:
   *  - empty input LIST raises (EmptyInputError("texts list"), api.py:322);
   *  - batch cap 1000 texts raises InvalidFieldError (api.py:53, 323-327);
   *  - per-ITEM problems never fail the batch: captured in `error`,
@@ -18,36 +21,34 @@ import graft.scrub.Scrubber
   *  - result shape mirrors `PIIResult.to_dict()` (src/inference.py:66-67);
   *  - every failure is a `graft.errors.GraftError`, whose `toMap`/`toJson`
   *    is the reference's `to_dict()` contract (exceptions.py:38).
+  *
+  * Request-scoped work (≤ 1000 texts, or one ≤ 50 MB upload) is scrubbed
+  * in-process on the calling thread; the corpus-scale path is
+  * [[graft.pipeline.QualityFilter]].
   */
 object Detect {
 
   val MaxBatchTexts = 1000 // api.py:53
 
-  /** Distributed batch detect: one row per input text, index-aligned. */
-  def detectBatch(spark: SparkSession, texts: Seq[String]): DataFrame = {
+  /** Batch detect: the caps, then one [[Scrubber.scrub]] per text, in
+    * input order.
+    */
+  def scrubBatch(texts: Seq[String]): Vector[ScrubResult] = {
     if (texts.isEmpty) throw EmptyInputError("texts list") // api.py:321-322
     if (texts.length > MaxBatchTexts)
       throw InvalidFieldError("texts",
         s"list length ${texts.length} exceeds maximum allowed $MaxBatchTexts") // api.py:323-327
-    import spark.implicits._
-    val scrubUdf = udf { (text: String) =>
-      val r = Scrubber.scrub(text)
-      (r.hasPii, r.scrubbed, r.piiTypes, r.entities, r.error)
-    }
-    texts.zipWithIndex.toDF("text", "idx")
-      .withColumn("r", scrubUdf(col("text")))
-      .select(
-        col("idx"),
-        col("r._1").as("hasPii"),
-        col("r._2").as("redactedText"),
-        col("r._3").as("piiTypes"),
-        col("r._4").as("entities"),
-        col("r._5").as("error"))
-      .orderBy("idx")
+    texts.iterator.map(Scrubber.scrub).toVector
   }
 
+  /** [[scrubBatch]] as a local DataFrame: one row per input text, `idx` is
+    * its position.
+    */
+  def detectBatch(spark: SparkSession, texts: Seq[String]): DataFrame =
+    resultFrame(spark, "idx", texts.indices, scrubBatch(texts))
+
   /** File-upload detect facade (reference api.py `/detect/file`,
-    * api.py:97-155 + 493-529): validate → read by extension → scrub.
+    * api.py:97-155 + 493-529): [[Uploads.readUpload]], then scrub.
     *  - `.txt`  → one detect row per non-blank line (line grid);
     *  - `.csv` / `.xlsx` → redacted grid, schema preserved, plus the
     *    per-row `_pii_types` aggregate.
@@ -56,39 +57,20 @@ object Detect {
     * contract (api.py:473-479 routes exactly these classes to 400).
     */
   def detectUpload(spark: SparkSession, path: String,
-      columns: Option[Seq[String]] = None): DataFrame = {
-    import graft.ingest.Uploads
-    Uploads.validateUpload(path)
-    val name = new java.io.File(path).getName
-    val ext = path.substring(path.lastIndexOf('.') + 1).toLowerCase
-    ext match {
-      case "txt" =>
-        val scrubUdf = udf { (text: String) =>
-          val r = Scrubber.scrub(text)
-          (r.hasPii, r.scrubbed, r.piiTypes, r.entities, r.error)
-        }
-        Uploads.readTxt(spark, path)
-          .withColumn("r", scrubUdf(col("line")))
-          .select(col("line"), col("r._1").as("hasPii"),
-            col("r._2").as("redactedText"), col("r._3").as("piiTypes"),
-            col("r._4").as("entities"), col("r._5").as("error"))
-      case "csv" =>
-        try Uploads.scrubGrid(Uploads.readCsv(spark, path), columns, name, "csv")
-        catch {
-          case e: GraftError => throw e
-          case e: Exception => // parse failure → typed 4xx, never a 500 (api.py:131-133)
-            throw CSVParsingError(name, String.valueOf(e.getMessage))
-        }
-      case "xlsx" =>
-        try Uploads.scrubGrid(Uploads.readXlsx(spark, path), columns, name, "excel")
-        catch {
-          case e: GraftError => throw e
-          case e: Exception => // corrupt zip/XML → typed 4xx, never a 500 (api.py:148-150)
-            throw ExcelParsingError(name, String.valueOf(e.getMessage))
-        }
-      case other =>
-        throw UnsupportedFileTypeError(name, s".$other")
+      columns: Option[Seq[String]] = None): DataFrame =
+    Uploads.readUpload(spark, path) match {
+      case Uploads.TxtUpload(lines) => resultFrame(spark, "line", lines, lines.map(Scrubber.scrub))
+      case Uploads.GridUpload(grid, kind) =>
+        Uploads.scrubGrid(grid, columns, new java.io.File(path).getName, kind)
     }
+
+  /** Results as rows keyed by `key`, in the `PIIResult.to_dict` fields. */
+  private def resultFrame[K: TypeTag](spark: SparkSession, key: String, keys: Seq[K],
+      results: Seq[ScrubResult]): DataFrame = {
+    import spark.implicits._
+    keys.zip(results)
+      .map { case (k, r) => (k, r.hasPii, r.scrubbed, r.piiTypes, r.entities, r.error) }
+      .toDF(key, "hasPii", "redactedText", "piiTypes", "entities", "error")
   }
 
   /** `/info` payload analogue (api.py:232-236): service/model metadata,
@@ -119,23 +101,5 @@ object Detect {
       try { graft.io.ModelArtifacts.validateModelDir(spark, modelDir); true }
       catch { case _: GraftError => false }
     ("healthy", loaded)
-  }
-
-  /** `get_pii_statistics` over a detect-batch result
-    * (reference src/inference.py:190-205).
-    */
-  def statistics(results: DataFrame): DataFrame = {
-    val dist = results
-      .select(explode(col("piiTypes")).as("piiType"))
-      .groupBy("piiType").agg(count(lit(1)).as("cnt"))
-      .agg(sort_array(collect_list(struct(col("cnt"), col("piiType"))), asc = false)
-        .as("piiTypeDistribution"))
-    results.agg(
-      count(lit(1)).as("totalTexts"),
-      sum(when(col("hasPii"), 1L).otherwise(0L)).as("textsWithPii"),
-      sum(when(!col("hasPii"), 1L).otherwise(0L)).as("textsWithoutPii"),
-      round(avg(when(col("hasPii"), 1.0).otherwise(0.0)), 4).as("piiRate"),
-      sum(when(col("error").isNotNull, 1L).otherwise(0L)).as("errors")
-    ).crossJoin(dist)
   }
 }

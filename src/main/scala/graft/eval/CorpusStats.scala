@@ -53,12 +53,4 @@ object CorpusStats {
     ds.toDF()
       .select(size(filter(col("labels"), l => l.startsWith("B-"))).as("nEntities"))
       .groupBy("nEntities").agg(count(lit(1)).as("nRecords"))
-
-  /** Mention counts per canonical type (EDA cell 17 / A2). */
-  def typeDistribution(ds: Dataset[TaggedRecord]): DataFrame =
-    ds.toDF()
-      .select(explode(col("labels")).as("label"))
-      .filter(col("label").startsWith("B-"))
-      .groupBy(expr("substring(label, 3)").as("entityType"))
-      .agg(count(lit(1)).as("mentions"))
 }

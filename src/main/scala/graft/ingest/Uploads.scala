@@ -31,7 +31,6 @@ object Uploads {
 
   val MaxFileBytes: Long = 50L * 1024 * 1024 // api.py:56
   val AllowedExtensions: Set[String] = Set("txt", "csv", "xlsx") // api.py:59
-  val MaxBatchTexts = 1000 // api.py:53
 
   private def fileName(path: String): String = new java.io.File(path).getName
 
@@ -96,35 +95,24 @@ object Uploads {
     dec.decode(java.nio.ByteBuffer.wrap(bytes, bom, bytes.length - bom)).toString
   }
 
-  private def readDecoded(path: String): (String, Charset) = {
-    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
-    val (cs, _) = detectCharset(bytes)
-    (decodeBytes(bytes), cs)
-  }
-
   /** Python-whitespace character class — every char `str.isspace()` is true
     * for (and `str.strip()` removes): Java's `\s` is ASCII-only, so a line
     * padded with U+00A0/U+2028 would be stripped by the reference
     * (api.py:113 `line.strip()`) but not by `\s` — exact parity needs the
     * explicit class (even `(?U)\s` misses U+001C-001F, which Python strips).
     */
-  val PyWhitespaceClass: String =
+  private val PyWhitespaceClass =
     "[\\t\\n\\u000B\\f\\r \\u001C-\\u001F\\u0085\\u00A0\\u1680\\u2000-\\u200A\\u2028\\u2029\\u202F\\u205F\\u3000]"
-  val PyStripRegex: String = s"^$PyWhitespaceClass+|$PyWhitespaceClass+$$"
+  private val PyStripRegex = s"^$PyWhitespaceClass+|$PyWhitespaceClass+$$"
 
   /** `str.strip()` parity as a pure function (golden-pinned vs CPython). */
   def pyStrip(s: String): String = s.replaceAll(PyStripRegex, "")
 
-  /** Python `str.splitlines()` boundaries BEYOND \n / \r\n / \r — the Hadoop
-    * line reader and a `\r\n|\r|\n` split already handle those three; Python
-    * additionally breaks on VT, FF, FS/GS/RS, NEL, LS, PS (api.py:113).
+  /** `str.splitlines()` parity for a whole decoded string: \n, \r\n, \r and
+    * the boundaries Python adds — VT, FF, FS/GS/RS, NEL, LS, PS (api.py:113).
     */
-  val PySplitlinesExtraClass: String =
-    "[\\u000B\\f\\u001C\\u001D\\u001E\\u0085\\u2028\\u2029]"
-
-  /** `str.splitlines()` parity for a whole decoded string. */
   def pySplitlines(s: String): Seq[String] =
-    s.split(s"\\r\\n|[\\n\\r]|$PySplitlinesExtraClass", -1).toIndexedSeq
+    s.split("\\r\\n|[\\n\\r\\u000B\\f\\u001C\\u001D\\u001E\\u0085\\u2028\\u2029]", -1).toIndexedSeq
 
   /** The reference's whole txt contract in one pure function
     * (api.py:113-114: `[l.strip() for l in text.splitlines() if l.strip()]`)
@@ -133,27 +121,19 @@ object Uploads {
   def pyLines(s: String): Seq[String] =
     pySplitlines(s).map(pyStrip).filter(_.nonEmpty)
 
-  /** `.txt` → DataFrame(line): split like `str.splitlines()`, trimmed like
-    * `str.strip()`, blanks removed (api.py:113-114).
+  /** `.txt` upload → its lines: validate, decode (api.py:97-99), then
+    * [[pyLines]] (api.py:113-114). The file is read once, driver-side —
+    * bounded by the 50 MB cap, like the reference's own in-memory decode.
     */
-  def readTxt(spark: SparkSession, path: String): DataFrame = {
+  def txtLines(path: String): Seq[String] = {
     validateUpload(path)
-    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
-    val (cs, bom) = detectCharset(bytes)
-    val raw =
-      if (cs == StandardCharsets.UTF_8 && bom == 0)
-        spark.read.text(path) // distributed fast path: file already UTF-8
-      else {
-        // non-UTF-8 upload: decode driver-side (bounded by the 50 MB cap —
-        // this is the reference's own in-memory decode, not the 100 TB path)
-        import spark.implicits._
-        spark.createDataset(pySplitlines(decodeBytes(bytes)).toIndexedSeq).toDF("value")
-      }
-    raw
-      // Hadoop split \n/\r\n/\r; Python also breaks on VT/FF/FS/GS/RS/NEL/LS/PS
-      .select(explode(split(col("value"), PySplitlinesExtraClass)).as("value"))
-      .select(regexp_replace(col("value"), PyStripRegex, "").as("line"))
-      .filter(length(col("line")) > 0)
+    pyLines(decodeBytes(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))))
+  }
+
+  /** `.txt` → DataFrame(line): one row per [[txtLines]] entry, in order. */
+  def readTxt(spark: SparkSession, path: String): DataFrame = {
+    import spark.implicits._
+    txtLines(path).toDF("line")
   }
 
   /** `.csv` → all-string DataFrame with header (api.py:131), nulls → "".
@@ -278,6 +258,33 @@ object Uploads {
     } finally zip.close()
   }
 
+  /** A read upload: a `.txt` file's lines, or a csv/xlsx grid with the
+    * kind label (`csv` / `excel`) that replies and error messages carry.
+    */
+  sealed trait Upload
+  final case class TxtUpload(lines: Seq[String]) extends Upload
+  final case class GridUpload(grid: DataFrame, kind: String) extends Upload
+
+  /** The one upload dispatcher (api.py:97-155): validate, read by
+    * extension, and turn a reader failure into its typed parse error
+    * (api.py:131-133, 148-150) — a 4xx, never a 500.
+    */
+  def readUpload(spark: SparkSession, path: String): Upload = {
+    validateUpload(path)
+    val name = fileName(path)
+    def parsed(err: String => GraftError)(read: => DataFrame): DataFrame =
+      try read
+      catch {
+        case e: GraftError => throw e
+        case e: Exception => throw err(String.valueOf(e.getMessage))
+      }
+    name.substring(name.lastIndexOf('.') + 1).toLowerCase match {
+      case "txt" => TxtUpload(txtLines(path))
+      case "csv" => GridUpload(parsed(CSVParsingError(name, _))(readCsv(spark, path)), "csv")
+      case "xlsx" => GridUpload(parsed(ExcelParsingError(name, _))(readXlsx(spark, path)), "excel")
+    }
+  }
+
   /** The reference's `_resolve_columns` (api.py:160-180): empty/None
     * selection → all columns; any requested column absent from the grid →
     * InvalidFieldError("columns", …) listing missing + available, python
@@ -316,14 +323,15 @@ object Uploads {
     }
     val stringCols = df.schema.fields
       .filter(f => f.dataType == StringType && selected.contains(f.name)).map(_.name)
-    var out = df
-    stringCols.foreach { c =>
-      out = out.withColumn(s"__scrub_$c", scrubUdf(col(c)))
+    // quoted: an upload header such as `a.b` names a column, not a field
+    def ref(c: String) = col("`" + c.replace("`", "``") + "`")
+    val out = stringCols.foldLeft(df) { (acc, c) =>
+      acc.withColumn(s"__scrub_$c", scrubUdf(ref(c)))
     }
     val rebuilt = stringCols.foldLeft(out) { (acc, c) =>
-      acc.withColumn(c, col(s"__scrub_${c}._1"))
+      acc.withColumn(c, ref(s"__scrub_$c").getField("_1"))
     }
-    val typeCols = stringCols.map(c => col(s"__scrub_$c._2"))
+    val typeCols = stringCols.map(c => ref(s"__scrub_$c").getField("_2"))
     val withTypes =
       if (typeCols.isEmpty) rebuilt.withColumn("_pii_types", array())
       else rebuilt.withColumn("_pii_types",

@@ -97,10 +97,6 @@ object Similarity {
     out
   }
 
-  def lshBucketsUdf(nTables: Int, planesPerTable: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((v: Seq[Float]) =>
-      if (v == null) Array.empty[Long] else lshBucketIds(v, nTables, planesPerTable))
-
   // ------------------------------------------------------------------
   // IVF (inverted-file) ANN: k-means coarse quantizer + probed buckets
   // ------------------------------------------------------------------

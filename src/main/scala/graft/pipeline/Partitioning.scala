@@ -14,9 +14,6 @@ import org.apache.spark.sql.functions._
   */
 object Partitioning {
 
-  /** Deterministic content-independent spread key. */
-  def fileHash: Column = xxhash64(col("repo"), col("path"))
-
   /** Balance rows across `n` partitions by hash(repo, path) — mega-repos
     * spread evenly instead of riding one input split.
     */

@@ -159,10 +159,11 @@ object QualityFilter {
 
   /** Whole-job statistics row — the exact `get_pii_statistics` shape
     * (reference src/inference.py:190-205): totals, 4-dp rate, per-type
-    * distribution sorted desc by count, error count.
+    * distribution sorted desc by count, error count. Reads the columns
+    * `hasPii`, `piiTypes` and `error`, which both [[run]]'s results and
+    * [[graft.api.Detect.detectBatch]]'s rows carry.
     */
-  def statistics(results: Dataset[ScanResult]): DataFrame = {
-    val df = results.toDF()
+  def statistics(df: DataFrame): DataFrame = {
     val dist = df
       .select(explode(col("piiTypes")).as("piiType"))
       .groupBy("piiType").agg(count(lit(1)).as("cnt"))

@@ -3,19 +3,21 @@ package graft.serve
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
-import java.util.concurrent.Executors
+import java.util.concurrent.{ExecutorService, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 import graft.api.Detect
 import graft.errors._
 import graft.ingest.Uploads
 import graft.model.Entity
 import graft.scrub.Scrubber
+import graft.scrub.Scrubber.ScrubResult
 
 /** Minimal HTTP serving layer over the [[graft.api.Detect]] facade — the
   * reference's primary entry point (reference src/api.py:156-556) closed
@@ -26,49 +28,64 @@ import graft.scrub.Scrubber
   * anything else → 500 InternalServerError; api.py:473-484).
   *
   * Zero external dependencies: the JDK's `com.sun.net.httpserver` plus the
-  * Jackson that ships on the Spark classpath. A fixed thread pool mirrors
-  * the reference's `gunicorn -w 4` (Makefile:97); Spark itself serialises
-  * job submission, so concurrent requests are safe.
+  * Jackson that ships on the Spark classpath. A fixed pool of
+  * [[HttpApi.PoolSize]] threads mirrors the reference's `gunicorn -w 4`
+  * (Makefile:97). Every route scrubs in-process on its worker thread and
+  * encodes [[Scrubber.ScrubResult]]s; `Scrubber.scrub` is a pure function,
+  * so concurrent requests are safe. Spark is touched only to read csv/xlsx
+  * uploads and the model directory.
   *
-  * Serving-scale note: this is the REQUEST-scOPED surface (≤ 1000 texts or
+  * Serving-scale note: this is the REQUEST-scoped surface (≤ 1000 texts or
   * one ≤ 50 MB upload per call, same caps as the reference). The corpus-
   * scale path is the library surface itself (QualityFilter / scrubGrid
   * over tables) — a REST hop per row would be the wrong architecture at
   * 10^12 files, exactly as the reference separates api.py from
   * run_data_pipeline.py.
   */
-final class HttpApi(spark: SparkSession, modelDir: String, poolSize: Int = 4) {
+final class HttpApi(spark: SparkSession, modelDir: String) {
 
   private val mapper = new ObjectMapper()
   private var server: HttpServer = _
+  private var pool: ExecutorService = _
 
   /** Bind and start; `port = 0` picks an ephemeral port. Returns the
-    * actual bound port.
+    * actual bound port. Worker threads are named `graft-http-<port>-<n>`.
     */
   def start(port: Int = 0): Int = synchronized {
     require(server == null, "server already started")
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
-    server.setExecutor(Executors.newFixedThreadPool(poolSize))
+    val bound = server.getAddress.getPort
+    val n = new AtomicInteger()
+    pool = Executors.newFixedThreadPool(HttpApi.PoolSize,
+      (r: Runnable) => new Thread(r, s"graft-http-$bound-${n.incrementAndGet()}"))
+    server.setExecutor(pool)
     server.createContext("/health", route("GET", health))
     server.createContext("/info", route("GET", info))
     server.createContext("/detect/batch", route("POST", detectBatch))
     server.createContext("/detect/file", route("POST", detectFile))
     server.createContext("/detect", route("POST", detectSingle))
     server.start()
-    server.getAddress.getPort
+    bound
   }
 
+  /** Close the socket, then shut the worker pool down and wait for the
+    * requests in flight to finish.
+    */
   def stop(): Unit = synchronized {
-    if (server != null) { server.stop(0); server = null }
+    if (server != null) {
+      server.stop(0)
+      pool.shutdown()
+      pool.awaitTermination(1, TimeUnit.MINUTES)
+      server = null
+      pool = null
+    }
   }
 
   // ------------------------------------------------------------------
   // Routing / error contract
   // ------------------------------------------------------------------
   /** The reference's `detector is None` guard: model dir validates. */
-  private def modelLoaded: Boolean =
-    try { graft.io.ModelArtifacts.validateModelDir(spark, modelDir); true }
-    catch { case _: GraftError => false }
+  private def modelLoaded: Boolean = Detect.health(spark, modelDir)._2
 
   private def statusOf(e: GraftError): Int = e match {
     case _: ModelNotFoundError | _: ModelLoadError => 503
@@ -122,8 +139,8 @@ final class HttpApi(spark: SparkSession, modelDir: String, poolSize: Int = 4) {
     send(ex, 200, resultDict(Scrubber.scrub(text)))
   }
 
-  /** POST /detect/batch (api.py:291-345) — the Spark path
-    * (Detect.detectBatch), results index-aligned with the input.
+  /** POST /detect/batch (api.py:291-345): [[Detect.scrubBatch]], results
+    * index-aligned with the input.
     */
   private def detectBatch(ex: HttpExchange): Unit = {
     if (!modelLoaded) throw ModelNotFoundError("(not initialised)")
@@ -132,18 +149,14 @@ final class HttpApi(spark: SparkSession, modelDir: String, poolSize: Int = 4) {
     val node = body.get("texts")
     if (!node.isArray)
       throw InvalidFieldError("texts", s"expected list, got ${pyType(node)}")
-    // a non-string item becomes null → a per-item error row, never a
-    // failed batch (src/inference.py:355-421 contract)
+    // a non-string item becomes null → a per-item error, never a failed
+    // batch (src/inference.py:355-421 contract)
     val texts = node.elements().asScala.map(n =>
       if (n.isTextual) n.asText() else null).toSeq
     val returnStats = body.has("return_stats") && body.get("return_stats").asBoolean(false)
-    val rows = Detect.detectBatch(spark, texts).collect() // throws typed 4xx on empty/oversized
-    val results = rows.map(rowResultDict)
-    val resp = linked("results" -> results.toSeq)
-    if (returnStats) resp.put("statistics",
-      toJava(statisticsDict(rows.map(r => (r.getAs[Boolean]("hasPii"),
-        r.getAs[scala.collection.Seq[String]]("piiTypes").toSeq,
-        r.getAs[String]("error"))))))
+    val results = Detect.scrubBatch(texts) // throws typed 4xx on empty/oversized
+    val resp = linked("results" -> results.map(r => resultDict(r)))
+    if (returnStats) resp.put("statistics", statisticsDict(results))
     send(ex, 200, resp)
   }
 
@@ -171,79 +184,45 @@ final class HttpApi(spark: SparkSession, modelDir: String, poolSize: Int = 4) {
     val path = dir.resolve(safe)
     try {
       Files.write(path, file.body)
-      val dot = safe.lastIndexOf('.')
-      val ext = if (dot < 0) "" else safe.substring(dot + 1).toLowerCase
-      ext match {
-        case "txt" =>
-          val rows = Detect.detectUpload(spark, path.toString).collect()
-          val results = rows.zipWithIndex.map { case (r, i) =>
-            val d = linked("line" -> (i + 1),
-              "original_text" -> r.getAs[String]("line"))
-            d.putAll(rowResultDict(r)); d
+      send(ex, 200, Uploads.readUpload(spark, path.toString) match {
+        case Uploads.TxtUpload(lines) =>
+          val results = lines.map(Scrubber.scrub)
+          val perLine = lines.zip(results).zipWithIndex.map { case ((l, r), i) =>
+            val d = linked("line" -> (i + 1), "original_text" -> l)
+            d.putAll(resultDict(r)); d
           }
-          send(ex, 200, linked(
-            "filename" -> safe, "file_type" -> "txt",
-            "results" -> results.toSeq,
-            "statistics" -> statisticsDict(rows.map(r =>
-              (r.getAs[Boolean]("hasPii"),
-                r.getAs[scala.collection.Seq[String]]("piiTypes").toSeq,
-                r.getAs[String]("error"))))))
-        case "csv" | "xlsx" =>
-          val df =
-            if (ext == "csv")
-              try Uploads.readCsv(spark, path.toString)
-              catch {
-                case e: GraftError => throw e
-                case e: Exception => throw CSVParsingError(safe, String.valueOf(e.getMessage))
-              }
-            else
-              try Uploads.readXlsx(spark, path.toString)
-              catch {
-                case e: GraftError => throw e
-                case e: Exception => throw ExcelParsingError(safe, String.valueOf(e.getMessage))
-              }
-          val kind = if (ext == "csv") "csv" else "excel"
-          val processed = Uploads.resolveColumns(df, columns, safe,
-            if (ext == "csv") "CSV" else "Excel")
+          linked("filename" -> safe, "file_type" -> "txt",
+            "results" -> perLine, "statistics" -> statisticsDict(results))
+        case Uploads.GridUpload(df, kind) =>
+          val processed = Uploads.resolveColumns(df, columns, safe, kind)
           val header = df.columns.toSeq
           val grid = df.collect() // bounded by the 50 MB upload cap
-          val cellResults = for {
-            (row, ri) <- grid.zipWithIndex
+          val cells = for {
+            (row, ri) <- grid.toSeq.zipWithIndex
             c <- processed
           } yield {
             val orig = row.getAs[String](c)
             (ri, c, orig, Scrubber.scrub(orig))
           }
-          val results = cellResults.map { case (ri, c, orig, r) =>
-            linked("row" -> ri, "column" -> c, "original_value" -> orig,
-              "has_pii" -> r.hasPii, "redacted_value" -> r.scrubbed,
-              "pii_types" -> r.piiTypes, "entities" -> r.entities.map(entityDict),
-              "error" -> r.error)
+          val results = cells.map { case (ri, c, orig, r) =>
+            val d = linked("row" -> ri, "column" -> c, "original_value" -> orig)
+            d.putAll(resultDict(r, "redacted_value")); d
           }
           // redacted grid: processed cells carry the scrub output (original
           // kept on per-cell error — scrubGrid's documented semantics);
           // untouched columns pass through
-          val byCell = cellResults.map { case (ri, c, orig, r) =>
+          val byCell = cells.map { case (ri, c, orig, r) =>
             (ri, c) -> (if (r.error != null) orig else r.scrubbed)
           }.toMap
-          val records = grid.zipWithIndex.map { case (row, ri) =>
-            val rec = new java.util.LinkedHashMap[String, Object]()
-            header.foreach { c =>
-              rec.put(c, byCell.getOrElse((ri, c), row.getAs[String](c)))
-            }
-            rec
+          val records = grid.toSeq.zipWithIndex.map { case (row, ri) =>
+            linked(header.map(c => c -> byCell.getOrElse((ri, c), row.getAs[String](c))): _*)
           }
-          send(ex, 200, linked(
-            "filename" -> safe, "file_type" -> kind,
+          linked("filename" -> safe, "file_type" -> kind,
             "columns_processed" -> processed,
-            "results" -> results.toSeq,
-            "redacted_records" -> records.toSeq,
-            "statistics" -> statisticsDict(cellResults.map { case (_, _, _, r) =>
-              (r.hasPii, r.piiTypes, r.error)
-            })))
-        case other =>
-          throw UnsupportedFileTypeError(safe, if (other.isEmpty) "" else s".$other")
-      }
+            "results" -> results,
+            "redacted_records" -> records,
+            "statistics" -> statisticsDict(cells.map(_._4)))
+      })
     } finally {
       Files.deleteIfExists(path); Files.deleteIfExists(dir)
     }
@@ -276,33 +255,23 @@ final class HttpApi(spark: SparkSession, modelDir: String, poolSize: Int = 4) {
     "text" -> e.text, "type" -> e.`type`, "start" -> e.start,
     "end" -> e.end, "confidence" -> e.confidence)
 
-  /** PIIResult.to_dict shape (src/inference.py:66-67). */
-  private def resultDict(r: Scrubber.ScrubResult) = linked(
-    "has_pii" -> r.hasPii, "redacted_text" -> r.scrubbed,
+  /** PIIResult.to_dict shape (src/inference.py:66-67); a tabular cell
+    * names its redacted text `redacted_value` (api.py:509-515).
+    */
+  private def resultDict(r: ScrubResult, redactedKey: String = "redacted_text") = linked(
+    "has_pii" -> r.hasPii, redactedKey -> r.scrubbed,
     "pii_types" -> r.piiTypes, "entities" -> r.entities.map(entityDict),
     "error" -> r.error)
-
-  /** Same shape from a Detect.detectBatch / detectUpload(txt) row. */
-  private def rowResultDict(r: Row) = {
-    val ents = r.getAs[scala.collection.Seq[Row]]("entities").toSeq.map(er => linked(
-      "text" -> er.getAs[String]("text"), "type" -> er.getAs[String]("type"),
-      "start" -> er.getAs[Int]("start"), "end" -> er.getAs[Int]("end"),
-      "confidence" -> er.getAs[Double]("confidence")))
-    linked("has_pii" -> r.getAs[Boolean]("hasPii"),
-      "redacted_text" -> r.getAs[String]("redactedText"),
-      "pii_types" -> r.getAs[scala.collection.Seq[String]]("piiTypes").toSeq,
-      "entities" -> ents, "error" -> r.getAs[String]("error"))
-  }
 
   /** get_pii_statistics shape (src/inference.py:190-205): distribution is
     * a count-descending object, ties in first-seen order (python's stable
     * sort over dict insertion order).
     */
-  private def statisticsDict(rs: Seq[(Boolean, Seq[String], String)]) = {
+  private def statisticsDict(rs: Seq[ScrubResult]) = {
     val total = rs.length
-    val withPii = rs.count(_._1)
+    val withPii = rs.count(_.hasPii)
     val counts = scala.collection.mutable.LinkedHashMap[String, Long]()
-    rs.foreach(_._2.foreach(t => counts.update(t, counts.getOrElse(t, 0L) + 1)))
+    rs.foreach(_.piiTypes.foreach(t => counts.update(t, counts.getOrElse(t, 0L) + 1)))
     val dist = new java.util.LinkedHashMap[String, Object]()
     counts.toSeq.sortBy(-_._2).foreach { case (t, c) => dist.put(t, Long.box(c)) }
     val rate =
@@ -311,7 +280,7 @@ final class HttpApi(spark: SparkSession, modelDir: String, poolSize: Int = 4) {
         .setScale(4, BigDecimal.RoundingMode.HALF_EVEN).toDouble
     linked("total_texts" -> total, "texts_with_pii" -> withPii,
       "texts_without_pii" -> (total - withPii), "pii_rate" -> rate,
-      "pii_type_distribution" -> dist, "errors" -> rs.count(_._3 != null))
+      "pii_type_distribution" -> dist, "errors" -> rs.count(_.error != null))
   }
 
   private def linked(kv: (String, Any)*): java.util.LinkedHashMap[String, Object] = {
@@ -344,6 +313,12 @@ final class HttpApi(spark: SparkSession, modelDir: String, poolSize: Int = 4) {
     val os = ex.getResponseBody
     try os.write(bytes) finally os.close()
   }
+}
+
+object HttpApi {
+
+  /** Worker threads per server (the reference's `gunicorn -w 4`). */
+  val PoolSize = 4
 }
 
 /** Minimal multipart/form-data parser (binary-safe) — enough for the

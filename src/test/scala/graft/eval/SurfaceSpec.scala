@@ -2,6 +2,8 @@ package graft.eval
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
@@ -62,7 +64,7 @@ class SurfaceSpec extends AnyFunSuite {
     assert(got.toSeq == Seq("hello utf16", "second zeile"))
   }
 
-  test("encoding detection: UTF-8 BOM stripped; plain UTF-8 stays on the distributed path") {
+  test("encoding detection: UTF-8 BOM stripped; invalid UTF-8 decodes as latin-1") {
     val got = Uploads.readTxt(spark, s"$res/upload_utf8bom.txt").as[String].collect()
     assert(got.toSeq == Seq("bom line one"))
     // replace semantics: invalid UTF-8 byte inside otherwise-valid text
@@ -70,6 +72,17 @@ class SurfaceSpec extends AnyFunSuite {
     assert(Uploads.detectCharset(bytes)._1 == java.nio.charset.StandardCharsets.ISO_8859_1)
     // latin-1 decodes every byte — 0x80 is U+0080, python's errors path never fires
     assert(Uploads.decodeBytes(bytes) == "ok  end")
+  }
+
+  test("readTxt is pyLines(decodeBytes(bytes)) on every txt upload fixture") {
+    val fixtures = new java.io.File(res).listFiles().toSeq
+      .filter(f => f.getName.startsWith("upload_") && f.getName.endsWith(".txt"))
+    assert(fixtures.length >= 4)
+    fixtures.foreach { f =>
+      val bytes = Files.readAllBytes(f.toPath)
+      val got = Uploads.readTxt(spark, f.getPath).as[String].collect().toSeq
+      assert(got == Uploads.pyLines(Uploads.decodeBytes(bytes)), f.getName)
+    }
   }
 
   test("xlsx upload: first sheet, header row, all strings, missing cells empty (api.py:141-155)") {
@@ -168,6 +181,14 @@ class SurfaceSpec extends AnyFunSuite {
     assert(out(1).getAs[String]("colA") == "clean")
     assert(out(1).getSeq[String](out(1).fieldIndex("_pii_types")).isEmpty)
     assert(out(0).getAs[Int]("id") == 1) // non-string column untouched
+  }
+
+  test("grid scrub: a dotted header names a column, not a struct field") {
+    val p = Files.createTempFile("dots", ".csv")
+    Files.writeString(p, "user.email,id\nbob@x.io,1\n")
+    val out = Detect.detectUpload(spark, p.toString).collect()
+    assert(out(0).getAs[String]("user.email") == "[REDACTED]")
+    assert(out(0).getSeq[String](out(0).fieldIndex("_pii_types")) == Seq("EMAIL"))
   }
 
   // ------------------------------------------------------------------
@@ -306,6 +327,36 @@ class SurfaceSpec extends AnyFunSuite {
     assert(!out(3).getAs[Boolean]("hasPii") && out(3).getAs[String]("error") == null)
   }
 
+  test("detectBatch(..).collect() starts no Spark job") {
+    val sc = spark.sparkContext
+    val group = "detect-batch-jobs"
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val sentinelDone = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          started.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        if (started.contains("sentinel")) sentinelDone.countDown()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "detectBatch")
+    try {
+      val out = Detect.detectBatch(spark, Seq("reach me at a@b.co", "clean", "")).collect()
+      assert(out.map(_.getAs[Int]("idx")).toSeq == Seq(0, 1, 2))
+      // the listener bus is ordered: once the sentinel's job has ended,
+      // every job detectBatch started has been seen
+      sc.setJobDescription("sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      assert(sentinelDone.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      assert(started.asScala.toSeq == Seq("sentinel"))
+    } finally {
+      sc.clearJobGroup()
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("detectUpload: per-extension dispatch, typed error on corrupt xlsx") {
     // txt → line grid with per-line scrub
     val rows = Detect.detectUpload(spark, s"$res/upload_latin1.txt").collect()
@@ -331,7 +382,7 @@ class SurfaceSpec extends AnyFunSuite {
 
   test("detect statistics: with + without == total, distribution desc (test_detector.py:268-290)") {
     val out = Detect.detectBatch(spark, Seq("a@b.co", "c@d.io and 10.0.0.1", "clean", ""))
-    val s = Detect.statistics(out).head()
+    val s = graft.pipeline.QualityFilter.statistics(out).head()
     assert(s.getAs[Long]("textsWithPii") + s.getAs[Long]("textsWithoutPii") ==
       s.getAs[Long]("totalTexts"))
     assert(s.getAs[Long]("errors") == 1)

@@ -57,7 +57,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("statistics algebra: with + without == total, rate in [0,1] (test_detector.py:268-290)") {
-    val row = QualityFilter.statistics(results).head()
+    val row = QualityFilter.statistics(results.toDF()).head()
     val total = row.getAs[Long]("totalTexts")
     val withPii = row.getAs[Long]("textsWithPii")
     val withoutPii = row.getAs[Long]("textsWithoutPii")

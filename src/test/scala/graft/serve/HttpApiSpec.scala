@@ -3,6 +3,9 @@ package graft.serve
 import java.net.{HttpURLConnection, URI}
 import java.nio.charset.StandardCharsets
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -94,7 +97,7 @@ class HttpApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(s5 == 503, "uninitialised model must 503")
   }
 
-  test("POST /detect/batch runs the Spark path, index-aligned, with statistics") {
+  test("POST /detect/batch scrubs in-process, index-aligned, with statistics") {
     val (s, b) = post("/detect/batch",
       """{"texts":["call 555-123-4567","clean text",null],"return_stats":true}""")
     assert(s == 200, s"$s $b")
@@ -106,6 +109,35 @@ class HttpApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(s2 == 400 && b2.contains("EmptyInputError"), b2)
     val (s3, b3) = post("/detect/batch", """{"texts":"nope"}""")
     assert(s3 == 400 && b3.contains("expected list, got str"), b3)
+  }
+
+  test("POST /detect/batch: results[i] equals the /detect reply for text i") {
+    val mapper = new ObjectMapper()
+    val texts = Seq(
+      "mail bob@example.com or call 555-123-4567",
+      "host 10.0.0.1 and token ghp_abcdefgh12345678",
+      "config password=hunter2hunter2 and 192.168.1.20",
+      "nothing sensitive here",
+      "a@b.co " + "x" * 50001) // over the 50k cap: a per-item error
+    val req = mapper.createObjectNode()
+    val arr = req.putArray("texts")
+    texts.foreach(t => arr.add(t))
+    arr.addNull(); arr.add("")
+    val (s, b) = post("/detect/batch", mapper.writeValueAsString(req))
+    assert(s == 200, s"$s $b")
+    val results = mapper.readTree(b).get("results")
+    assert(results.size == texts.length + 2)
+    texts.zipWithIndex.foreach { case (t, i) =>
+      val (s1, b1) = post("/detect", mapper.writeValueAsString(java.util.Map.of("text", t)))
+      assert(s1 == 200, s"$s1 $b1")
+      assert(results.get(i) == mapper.readTree(b1), s"text $i")
+    }
+    val types = results.elements().asScala.flatMap(_.get("pii_types").elements().asScala.map(_.asText())).toSet
+    assert(types == Set("EMAIL", "IP_ADDRESS", "PHONE", "SECRET"))
+    assert(!results.get(texts.length - 1).get("error").isNull)
+    // null and empty items stay per-item errors
+    assert(!results.get(texts.length).get("error").isNull &&
+      !results.get(texts.length + 1).get("error").isNull)
   }
 
   private def multipart(fields: Seq[(String, String, Array[Byte])]): (Array[Byte], String) = {
@@ -159,8 +191,23 @@ class HttpApiSpec extends AnyFunSuite with BeforeAndAfterAll {
       ("columns", null, "nope".getBytes)))
     val (s3, r3) = call(port, "POST", "/detect/file", b3, ct3)
     assert(s3 == 400 && r3.contains("InvalidFieldError") && r3.contains("nope"), r3)
+    assert(r3.contains("\"message\":\"Invalid value for field 'columns': Column(s) ['nope'] " +
+      "not found in csv file 'd.csv'. Available columns: ['a', 'b']\""), r3)
     val (s4, _) = call(badPort, "POST", "/detect/file", b1, ct1)
     assert(s4 == 503, "uninitialised model must 503 before parsing")
+  }
+
+  test("stop() shuts down the server's named worker threads") {
+    val srv = new HttpApi(spark, "/nonexistent-model-dir")
+    val p = srv.start()
+    (1 to 6).foreach(_ => call(p, "GET", "/health"))
+    def workers = Thread.getAllStackTraces.keySet.asScala.toSeq
+      .filter(_.getName.startsWith(s"graft-http-$p-"))
+    val seen = workers
+    assert(seen.nonEmpty, "worker threads carry the server's port in their name")
+    srv.stop()
+    seen.foreach(_.join(10000))
+    assert(workers.isEmpty, workers.map(_.getName))
   }
 
   test("wrong method yields 405, not a handler crash") {
